@@ -20,4 +20,57 @@ Design principles (100 TB posture):
   ``repair-avro.ts:72-74``).
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _gate_zipimport_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed on disk (Python < 3.12).
+
+    PySpark calls ``importlib.invalidate_caches()`` before every Python
+    task. On 3.11 each zipimporter then eagerly re-reads its archive's
+    whole central directory, and a worker importing pyspark from
+    ``pyspark.zip`` holds a dozen or more importers on it: 0.2-0.3 s of
+    CPU per task, more than most tasks' real work. CPython made the
+    invalidation lazy in 3.12 (gh-103200); this keeps 3.11's semantics
+    (a rewritten archive is re-read) at the cost of one ``stat``.
+    Every executor-side code path imports this package, so the gate is
+    live in every worker that runs engine code. Idempotent."""
+    import os
+    import zipimport
+
+    if getattr(zipimport.zipimporter.invalidate_caches, "stat_gated", False):
+        return
+    read_directory = zipimport._read_directory
+    invalidate = zipimport.zipimporter.invalidate_caches
+    # archive path -> (mtime_ns, size, inode) when its directory was read
+    read_at: dict[str, tuple[int, int, int] | None] = {}
+
+    def signature(archive):
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size, st.st_ino
+
+    def _read_directory(archive):
+        read_at[archive] = signature(archive)  # before: a racing rewrite re-reads
+        return read_directory(archive)
+
+    def invalidate_caches(self):
+        files = zipimport._zip_directory_cache.get(self.archive)
+        sig = signature(self.archive)
+        if files is None or sig is None or read_at.get(self.archive) != sig:
+            invalidate(self)
+        else:
+            self._files = files
+
+    invalidate_caches.stat_gated = True
+    zipimport._read_directory = _read_directory
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+if sys.version_info < (3, 12):
+    _gate_zipimport_invalidation()

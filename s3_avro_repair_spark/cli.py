@@ -43,7 +43,9 @@ def _build_report(spark, path: str, replace: bool, out_dir: str | None):
     _, root = fsio.resolve(os.path.abspath(path) if "://" not in path else path)
 
     files = _binary_files(spark, path)
-    n_files = files.count()
+    # The scan's own file listing (metadata, no job): count() would
+    # run a job that reads every file once more before the repair does.
+    n_files = len(files.inputFiles())
     if n_files == 0:
         return None, 0
     files = files.repartition(min(n_files, 256), "path")

@@ -206,14 +206,14 @@ class AvroOCFReader(DataSourceReader):
                     head += f.read(min(len(head), fsize - len(head)))
             names = [fl["name"] for fl in schema["fields"]]
 
-            # Whole-file fast path (r11): when the container fits one
-            # split (the common case at fixture scale; at 100 TB most
-            # files span many splits and take the streamed path), read
-            # it once and decode from memory — the chunked grow/trim
-            # machinery below copies the buffer on every trim, pure
-            # overhead when the bytes all fit anyway. Planning is
-            # untouched: partitions() still emits byte-range splits.
-            whole = start == 0 and end >= fsize
+            # Whole-file fast path (r11): a container that fits one
+            # split and one chunk is read once and decoded from memory —
+            # the chunked grow/trim machinery below copies the buffer on
+            # every trim, pure overhead when the bytes all fit anyway.
+            # The chunk bound keeps per-task memory at chunk + one block
+            # whatever split_size_bytes is. Planning is untouched:
+            # partitions() still emits byte-range splits.
+            whole = start == 0 and end >= fsize and fsize <= _CHUNK
             if whole and len(head) < fsize:
                 head += f.read()
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 
 import pytest
@@ -10,6 +11,28 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def pytest_collection_modifyitems(config, items):
+    """Deselect the ``slow`` sweep arms unless they were asked for: by
+    any ``-m`` expression, or by naming their file on the command line
+    (``pytest tests/test_production_shard.py`` runs every arm in it;
+    ``pytest tests/`` keeps the default tier)."""
+    if config.option.markexpr:
+        return
+    named = {
+        pathlib.Path(config.invocation_params.dir, arg.split("::")[0]).resolve()
+        for arg in config.args
+    }
+    slow = [
+        item
+        for item in items
+        if item.get_closest_marker("slow") and item.path.resolve() not in named
+    ]
+    if slow:
+        config.hook.pytest_deselected(items=slow)
+        dropped = set(slow)
+        items[:] = [item for item in items if item not in dropped]
 
 
 @pytest.fixture(scope="session")

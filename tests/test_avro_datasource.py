@@ -214,3 +214,79 @@ def test_corruption_fails_split_scans_too(spark, tmp_path):
         # the message text is the practical pin.
         with pytest.raises(Exception, match="sync marker damaged|block@"):
             rd.load(str(d)).count()
+
+
+def test_single_split_larger_than_chunk_streams_bounded_reads(tmp_path, monkeypatch):
+    """A container read as ONE split but larger than _CHUNK takes the
+    streamed path: per-task memory stays chunk + one block whatever
+    split_size_bytes is (the whole-file fast path is for containers
+    that fit one chunk). Rows equal the whole-file read; a spy on the
+    file object sees no read() larger than max(_CHUNK, largest block)."""
+    import pyarrow as pa
+
+    from s3_avro_repair_spark import fsio
+    from s3_avro_repair_spark.avro_codec import block_spans
+    from s3_avro_repair_spark.sources import avro_datasource as ds
+
+    d = tmp_path / "one"
+    d.mkdir()
+    recs = [
+        {"k": i, "s": f"value-{i}" if i % 5 else None, "x": i / 4.0}
+        for i in range(20000)
+    ]
+    raw = write_ocf_bytes(SCHEMA, recs, block_records=200)
+    (d / "one.avro").write_bytes(raw)
+    largest_block = max(end - start for start, _p, _s, end in block_spans(raw))
+    out = [("k", pa.int64()), ("s", pa.string()), ("x", pa.float64())]
+
+    reader = ds.AvroOCFReader({"path": str(d)}, out)
+    parts = reader.partitions()
+    assert len(parts) == 1
+
+    def read_rows():
+        return pa.Table.from_batches(list(reader.read(parts[0]))).to_pylist()
+
+    want = read_rows()  # default _CHUNK: the whole-file fast path
+    assert len(want) == len(recs)
+
+    chunk = 64 * 1024
+    assert len(raw) > 4 * chunk
+    reads: list[int] = []
+
+    class SpyFile:
+        def __init__(self, f):
+            self._f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+        def read(self, *args):
+            data = self._f.read(*args)
+            reads.append(len(data))
+            return data
+
+        def seek(self, *args):
+            return self._f.seek(*args)
+
+    class SpyFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def open_input_file(self, p):
+            return SpyFile(self._fs.open_input_file(p))
+
+    real_resolve = fsio.resolve
+
+    def spy_resolve(path, filesystem=None):
+        fs, p = real_resolve(path, filesystem)
+        return SpyFS(fs), p
+
+    monkeypatch.setattr(ds, "_CHUNK", chunk)
+    monkeypatch.setattr(fsio, "resolve", spy_resolve)
+    got = read_rows()
+    assert got == want
+    assert sum(reads) >= len(raw)  # the spy saw every byte read
+    assert max(reads) <= max(chunk, largest_block)

@@ -64,3 +64,27 @@ def test_cli_main_prints_bounded_detail(spark, sf_dir, tmp_path, capsys):
     for line in outtxt.splitlines():
         if line.strip().startswith("part-") and " healthy" in line:
             raise AssertionError(f"healthy row in detail: {line}")
+
+
+def test_cli_counts_from_the_listing_without_a_job(spark, sf_dir, tmp_path, capsys):
+    """Building the report runs no Spark job: the file count comes from
+    the scan's own listing, so the fleet is read once, by the repair
+    stage. An empty tree still exits 1."""
+    from s3_avro_repair_spark.cli import main
+
+    root = ensure_avro_fixtures(sf_dir)
+    indir = tmp_path / "in"
+    shutil.copytree(os.path.join(root, "corrupt"), indir)
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-listing", "report build only")
+    try:
+        report, n_files = _build_report(spark, str(indir), False, None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_files == 8
+    assert sc.statusTracker().getJobIdsForGroup("cli-listing") == []
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert main(["--path", str(empty)]) == 1
+    assert "no .avro files" in capsys.readouterr().err
