@@ -24,11 +24,14 @@ byte-exactly but whose trailing sync marker is damaged is RECOVERED
 forward to the next sync-marker occurrence. A damaged header is
 unrepairable — the schema is gone.
 
+Values decode through ONE path: :func:`compile_decoder`, with
+:func:`compile_resolved_decoder` planning reader-schema reads on top.
+
 Everything here runs inside executors (``mapInPandas`` over
-``binaryFile`` rows) — never on the driver, never a whole-directory
-buffer; one file's bytes at a time, exactly the unit the reference
-processed sequentially (``repair-avro.ts:52-71``) but parallelized
-per-task.
+``binaryFile`` rows, and the ``avro_ocf`` data source's split reader)
+— never on the driver, never a whole-directory buffer; one file or
+split per task, the unit the reference processed sequentially
+(``repair-avro.ts:52-71``) but parallelized.
 """
 
 from __future__ import annotations
@@ -78,34 +81,9 @@ def _encode_long(n: int, out: bytearray) -> None:
             return
 
 
-def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = 0
-    acc = 0
-    n = len(buf)
-    while True:
-        if pos >= n:
-            raise CorruptBlock("varint runs past end of buffer")
-        if shift > 63:
-            raise CorruptBlock("varint longer than 64 bits")
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1), pos
-
-
 def _encode_bytes(b: bytes, out: bytearray) -> None:
     _encode_long(len(b), out)
     out.extend(b)
-
-
-def _read_sized(buf: bytes, pos: int) -> tuple[bytes, int]:
-    size, pos = _read_long(buf, pos)
-    if size < 0 or pos + size > len(buf):
-        raise CorruptBlock(f"sized value of {size} bytes exceeds buffer")
-    return buf[pos : pos + size], pos + size
 
 
 # ---------------------------------------------------------------------------
@@ -332,89 +310,6 @@ def encode_value(schema, val, out: bytearray) -> None:
         raise ValueError(f"unsupported schema type {t!r}")
 
 
-def decode_value(schema, buf: bytes, pos: int):
-    t = _schema_type(schema)
-    if t == "null":
-        return None, pos
-    if t == "boolean":
-        if pos >= len(buf):
-            raise CorruptBlock("boolean past end")
-        b = buf[pos]
-        if b not in (0, 1):
-            raise CorruptBlock(f"invalid boolean byte {b}")
-        return b == 1, pos + 1
-    if t in ("int", "long"):
-        return _read_long(buf, pos)
-    if t == "float":
-        if pos + 4 > len(buf):
-            raise CorruptBlock("float past end")
-        return struct.unpack_from("<f", buf, pos)[0], pos + 4
-    if t == "double":
-        if pos + 8 > len(buf):
-            raise CorruptBlock("double past end")
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if t == "bytes":
-        return _read_sized(buf, pos)
-    if t == "string":
-        raw, pos = _read_sized(buf, pos)
-        try:
-            return raw.decode("utf-8"), pos
-        except UnicodeDecodeError as exc:
-            raise CorruptBlock(f"invalid utf-8 string: {exc}") from exc
-    if t == "record":
-        rec = {}
-        for f in schema["fields"]:
-            rec[f["name"]], pos = decode_value(f["type"], buf, pos)
-        return rec, pos
-    if t == "array":
-        items = []
-        while True:
-            count, pos = _read_long(buf, pos)
-            if count == 0:
-                return items, pos
-            if count < 0:  # negative count: abs(count) items + byte size
-                count = -count
-                _, pos = _read_long(buf, pos)
-            if count > MAX_BLOCK_RECORDS:
-                raise CorruptBlock("array count out of bounds")
-            for _ in range(count):
-                item, pos = decode_value(schema["items"], buf, pos)
-                items.append(item)
-    if t == "map":
-        entries = {}
-        while True:
-            count, pos = _read_long(buf, pos)
-            if count == 0:
-                return entries, pos
-            if count < 0:
-                count = -count
-                _, pos = _read_long(buf, pos)
-            if count > MAX_BLOCK_RECORDS:
-                raise CorruptBlock("map count out of bounds")
-            for _ in range(count):
-                kraw, pos = _read_sized(buf, pos)
-                entries[kraw.decode("utf-8")], pos = decode_value(
-                    schema["values"], buf, pos
-                )
-    if t == "union":
-        idx, pos = _read_long(buf, pos)
-        if not 0 <= idx < len(schema):
-            raise CorruptBlock(f"union index {idx} out of range")
-        return decode_value(schema[idx], buf, pos)
-    if t == "enum":
-        idx, pos = _read_long(buf, pos)
-        symbols = schema["symbols"]
-        if not 0 <= idx < len(symbols):
-            raise CorruptBlock(f"enum index {idx} out of range")
-        return symbols[idx], pos
-    if t == "fixed":
-        size = schema["size"]
-        if pos + size > len(buf):
-            raise CorruptBlock("fixed past end")
-        return buf[pos : pos + size], pos + size
-    raise ValueError(f"unsupported schema type {t!r}")
-
-
 # ---------------------------------------------------------------------------
 # container file: write
 # ---------------------------------------------------------------------------
@@ -594,11 +489,7 @@ def write_ocf(
     assert len(sync) == SYNC_SIZE
     header = bytearray(MAGIC)
     meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": codec.encode()}
-    _encode_long(len(meta), header)
-    for k, v in meta.items():
-        _encode_bytes(k.encode(), header)
-        _encode_bytes(v, header)
-    _encode_long(0, header)
+    encode_value({"type": "map", "values": "bytes"}, meta, header)
     header.extend(sync)
     fo.write(bytes(header))
 
@@ -644,23 +535,9 @@ def read_header(data: bytes) -> tuple[dict, str, bytes, int]:
     """Returns (schema, codec, sync, pos_after_header)."""
     if data[:4] != MAGIC:
         raise CorruptHeader("bad magic")
-    pos = 4
-    meta: dict[str, bytes] = {}
-    try:
-        while True:
-            count, pos = _read_long(data, pos)
-            if count == 0:
-                break
-            if count < 0:
-                count = -count
-                _, pos = _read_long(data, pos)
-            if count > 1 << 20:
-                raise CorruptHeader("metadata map count out of bounds")
-            for _ in range(count):
-                kraw, pos = _read_sized(data, pos)
-                v, pos = _read_sized(data, pos)
-                meta[kraw.decode("utf-8")] = v
-    except (CorruptBlock, UnicodeDecodeError) as exc:
+    try:  # the file metadata is a map<bytes> (spec §Object Container Files)
+        meta, pos = _map_decoder(compile_decoder("bytes"))(data, 4)
+    except CorruptBlock as exc:
         raise CorruptHeader(f"metadata map unreadable: {exc}") from exc
     if pos + SYNC_SIZE > len(data):
         raise CorruptHeader("truncated before sync marker")
@@ -681,21 +558,15 @@ _DECODER_CACHE: dict[str, object] = {}
 
 def compile_decoder(schema):
     """Source-codegen a decoder specialized to ``schema`` (the fastavro
-    approach): one generated function decodes a whole top-level value
-    with varints, strings, and scalars INLINED — no per-value schema
-    dispatch, no per-field Python call. The r8 profile put 94% of
-    snappy-scan time in :func:`decode_value`'s recursive dispatch
-    (the decompress+CRC path the round set out to optimize measured
-    ~1%), and every block of every file re-pays it; the generated
-    decoder is the same state machine flattened.
-
-    Semantics are IDENTICAL to decode_value by construction: the
-    generated code raises the same :class:`CorruptBlock` messages from
-    the same conditions (the corruption-injection suite pins them),
-    and subtypes the generator does not inline (arrays, maps, enums,
-    fixed) fall back to decode_value itself; nested records compile
-    recursively. Cached per schema JSON — one codegen per schema per
-    worker process, microseconds against millions of avoided calls."""
+    approach) — the codec's only value decoder, compiled once per file
+    or split. Scalars, strings, unions, enums and fixed are INLINED: no
+    per-value schema dispatch, no per-field Python call. Nested records
+    compile recursively; arrays and maps bind a block-loop closure over
+    their compiled item decoder. Damage raises :class:`CorruptBlock`
+    with fixed messages (the corruption-injection suite pins them); an
+    unknown type (e.g. a named-type reference) raises ``ValueError``
+    when a value of it is decoded. Cached per schema JSON — one codegen
+    per schema per worker process."""
     key = json.dumps(schema, sort_keys=True)
     fn = _DECODER_CACHE.get(key)
     if fn is not None:
@@ -704,10 +575,13 @@ def compile_decoder(schema):
     ns: dict[str, object] = {
         "unpack_from": struct.unpack_from,
         "CorruptBlock": CorruptBlock,
-        "decode_value": decode_value,
     }
     lines: list[str] = ["def _decoder(buf, pos):", "    blen = len(buf)"]
-    n_fallbacks = [0]
+
+    def bind(obj) -> str:
+        name = f"_b{len(ns)}"
+        ns[name] = obj
+        return name
 
     def varint(ind: str, out: str) -> None:
         lines.extend(
@@ -803,16 +677,38 @@ def compile_decoder(schema):
             for i, branch in enumerate(s):
                 lines.append(f"{ind}{'if' if i == 0 else 'elif'} idx_ == {i}:")
                 emit(branch, ind + "    ", out)
+        elif t == "enum":
+            varint(ind, "idx_")
+            symbols = tuple(s["symbols"])
+            lines.extend(
+                [
+                    f"{ind}if not 0 <= idx_ < {len(symbols)}:",
+                    f"{ind}    raise CorruptBlock("
+                    "'enum index %d out of range' % idx_)",
+                    f"{ind}{out} = {bind(symbols)}[idx_]",
+                ]
+            )
+        elif t == "fixed":
+            size = int(s["size"])
+            lines.extend(
+                [
+                    f"{ind}if pos + {size} > blen:",
+                    f"{ind}    raise CorruptBlock('fixed past end')",
+                    f"{ind}{out} = buf[pos:pos + {size}]",
+                    f"{ind}pos += {size}",
+                ]
+            )
         elif t == "record":
-            sub = f"_rec{n_fallbacks[0]}"
-            n_fallbacks[0] += 1
-            ns[sub] = compile_decoder(s)
-            lines.append(f"{ind}{out}, pos = {sub}(buf, pos)")
-        else:  # array / map / enum / fixed: rare in row data — delegate
-            sub = f"_sch{n_fallbacks[0]}"
-            n_fallbacks[0] += 1
-            ns[sub] = s
-            lines.append(f"{ind}{out}, pos = decode_value({sub}, buf, pos)")
+            lines.append(f"{ind}{out}, pos = {bind(compile_decoder(s))}(buf, pos)")
+        elif t == "array":
+            sub = _array_decoder(compile_decoder(s["items"]))
+            lines.append(f"{ind}{out}, pos = {bind(sub)}(buf, pos)")
+        elif t == "map":
+            sub = _map_decoder(compile_decoder(s["values"]))
+            lines.append(f"{ind}{out}, pos = {bind(sub)}(buf, pos)")
+        else:
+            msg = f"unsupported schema type {t!r}"
+            lines.append(f"{ind}raise ValueError({msg!r})")
 
     if _schema_type(schema) == "record":
         pairs = []
@@ -837,11 +733,61 @@ def compile_decoder(schema):
     return fn
 
 
-def _decode_block(payload: bytes, schema, count: int) -> list:
+# Zigzag varint reader for block frames, array/map block counts and
+# resolved-union indexes: the generated decoder of "long" itself.
+_read_long = compile_decoder("long")
+
+
+def _block_count(buf: bytes, pos: int, kind: str) -> tuple[int, int]:
+    """Array/map block header (spec §Complex Types): item count, plus a
+    byte size after a negative count. The one array/map count bound."""
+    count, pos = _read_long(buf, pos)
+    if count < 0:
+        count = -count
+        _, pos = _read_long(buf, pos)
+    if count > MAX_BLOCK_RECORDS:
+        raise CorruptBlock(f"{kind} count out of bounds")
+    return count, pos
+
+
+def _array_decoder(item):
+    """Array decoder over a compiled (plain or resolved) item decoder."""
+
+    def d_array(buf, pos):
+        items = []
+        while True:
+            count, pos = _block_count(buf, pos, "array")
+            if not count:
+                return items, pos
+            for _ in range(count):
+                v, pos = item(buf, pos)
+                items.append(v)
+
+    return d_array
+
+
+def _map_decoder(value):
+    """Map decoder over a compiled (plain or resolved) value decoder;
+    keys decode through the string path."""
+    key = compile_decoder("string")
+
+    def d_map(buf, pos):
+        entries = {}
+        while True:
+            count, pos = _block_count(buf, pos, "map")
+            if not count:
+                return entries, pos
+            for _ in range(count):
+                k, pos = key(buf, pos)
+                entries[k], pos = value(buf, pos)
+
+    return d_map
+
+
+def _decode_block(payload: bytes, dec, count: int) -> list:
     """Strict: exactly `count` records consuming exactly the payload."""
     recs = []
     pos = 0
-    dec = compile_decoder(schema)
     for _ in range(count):
         rec, pos = dec(payload, pos)
         recs.append(rec)
@@ -850,20 +796,45 @@ def _decode_block(payload: bytes, schema, count: int) -> list:
     return recs
 
 
+def _block_frame(buf: bytes, pos: int, end: int) -> tuple[int, int, int]:
+    """The one data-block frame parser: bounded count and size varints at
+    ``buf[pos]``, payload + sync ending by ``end`` (file end in ``buf``
+    coordinates). Returns (count, payload_start, payload_end); the sync
+    marker after payload_end is the caller's to check."""
+    count, p = _read_long(buf, pos)
+    if not 0 <= count <= MAX_BLOCK_RECORDS:
+        raise CorruptBlock(f"record count {count} out of bounds")
+    size, p = _read_long(buf, p)
+    if not 0 <= size <= MAX_BLOCK_BYTES or p + size + SYNC_SIZE > end:
+        raise CorruptBlock(f"block size {size} exceeds file")
+    return count, p, p + size
+
+
+def _walk_blocks(data: bytes, pos: int, sync: bytes | None = None):
+    """Strict walk over an in-memory container's blocks from ``pos``:
+    yields (block_start, count, payload_start, payload_end); raises
+    ``block@<offset>: ...`` at a bad frame or, given ``sync``, a damaged
+    sync marker."""
+    n = len(data)
+    while pos < n:
+        try:
+            count, p, q = _block_frame(data, pos, n)
+            if sync is not None and data[q : q + SYNC_SIZE] != sync:
+                raise CorruptBlock("sync marker damaged")
+        except CorruptBlock as exc:
+            raise CorruptBlock(f"block@{pos}: {exc}") from exc
+        yield pos, count, p, q
+        pos = q + SYNC_SIZE
+
+
 def block_spans(data: bytes) -> list[tuple[int, int, int, int]]:
     """Structural walk for the corruption-injection tests:
     [(block_start, payload_start, payload_size, end_after_sync), ...]."""
-    _, _, sync, pos = read_header(data)
-    spans = []
-    while pos < len(data):
-        start = pos
-        count, p = _read_long(data, pos)
-        size, p = _read_long(data, p)
-        if count < 0 or size < 0 or p + size + SYNC_SIZE > len(data):
-            raise CorruptBlock("bad block structure")
-        spans.append((start, p, size, p + size + SYNC_SIZE))
-        pos = p + size + SYNC_SIZE
-    return spans
+    _, _, _, pos = read_header(data)
+    return [
+        (start, p, q - p, q + SYNC_SIZE)
+        for start, _count, p, q in _walk_blocks(data, pos)
+    ]
 
 
 def block_stats(data: bytes) -> tuple[int, int, int]:
@@ -874,15 +845,10 @@ def block_stats(data: bytes) -> tuple[int, int, int]:
     for every object without decoding a single value."""
     _, _, _, pos = read_header(data)
     blocks = records = payload = 0
-    while pos < len(data):
-        count, p = _read_long(data, pos)
-        size, p = _read_long(data, p)
-        if count < 0 or size < 0 or p + size + SYNC_SIZE > len(data):
-            raise CorruptBlock("bad block structure")
+    for _start, count, p, q in _walk_blocks(data, pos):
         blocks += 1
         records += count
-        payload += size
-        pos = p + size + SYNC_SIZE
+        payload += q - p
     return blocks, records, payload
 
 
@@ -917,18 +883,13 @@ def salvage_ocf(data: bytes) -> SalvageResult:
     except CorruptHeader as exc:
         return SalvageResult(header_ok=False, errors=[str(exc)])
     res = SalvageResult(header_ok=True, schema=schema)
+    dec = compile_decoder(schema)
     n = len(data)
     while pos < n:
         block_start = pos
         try:
-            count, p = _read_long(data, pos)
-            if not 0 <= count <= MAX_BLOCK_RECORDS:
-                raise CorruptBlock(f"record count {count} out of bounds")
-            size, p = _read_long(data, p)
-            if not 0 <= size <= MAX_BLOCK_BYTES or p + size + SYNC_SIZE > n:
-                raise CorruptBlock(f"block size {size} exceeds file")
-            payload = _decompress(data[p : p + size], codec)
-            recs = _decode_block(payload, schema, count)
+            count, p, q = _block_frame(data, pos, n)
+            recs = _decode_block(_decompress(data[p:q], codec), dec, count)
         except (CorruptBlock, CorruptHeader, ValueError, OverflowError) as exc:
             res.n_blocks_bad += 1
             res.errors.append(f"block@{block_start}: {exc}")
@@ -939,13 +900,13 @@ def salvage_ocf(data: bytes) -> SalvageResult:
             continue
         # Payload decoded byte-exactly; accept even if the trailing sync
         # marker is damaged (recover-past-bad-sync, like avro-tools repair).
-        if data[p + size : p + size + SYNC_SIZE] != sync:
+        if data[q : q + SYNC_SIZE] != sync:
             res.n_blocks_resynced += 1
             res.errors.append(f"block@{block_start}: sync marker damaged")
         else:
             res.n_blocks_ok += 1
         res.records.extend(recs)
-        pos = p + size + SYNC_SIZE
+        pos = q + SYNC_SIZE
     return res
 
 
@@ -988,151 +949,87 @@ class SchemaResolutionError(ValueError):
     """Writer and reader schemas cannot be matched per the spec."""
 
 
-def decode_resolved(writer, reader, buf: bytes, pos: int):
-    """Decode bytes written with ``writer`` as the ``reader`` schema —
-    the Avro schema-evolution read (spec §Schema Resolution):
+def compile_resolved_decoder(writer, reader):
+    """Compile the schema-evolution read (spec §Schema Resolution) of
+    ``writer`` bytes as ``reader`` values, planned once per pair:
 
-    - record fields matched BY NAME: writer-only fields are skipped
-      (their bytes decoded and discarded), reader-only fields take
-      their declared ``default``;
-    - primitive promotions int->long/float/double, long->float/double,
+    - record fields matched BY NAME: writer-only fields are decoded and
+      discarded, reader-only fields take their declared ``default``;
+    - promotions int->long/float/double, long->float/double,
       float->double, string<->bytes;
-    - writer unions resolve their tagged branch against the reader
-      type; reader unions accept the writer type via first matching
-      branch.
+    - writer unions resolve each branch against the reader; a reader
+      union takes the first branch that resolves, falling back to the
+      next per value on :class:`SchemaResolutionError`;
+    - array items and map values resolve through the plain decoder's
+      block loops; enums match by symbol NAME (a writer symbol the
+      reader lacks takes the reader's ``default``); fixed sizes agree.
 
-    This is what lets a 100 TB scan apply TODAY'S schema to years of
-    heterogeneously-written files in one pass.
-    """
+    Leaves reuse :func:`compile_decoder`. Resolution errors stay LAZY:
+    an unresolvable pair raises when its first value is decoded, so a
+    zero-record file or an unused union branch still reads clean."""
+    try:
+        return _resolve(writer, reader)
+    except SchemaResolutionError as exc:
+        msg = str(exc)
+
+        def d_unresolved(buf, pos):
+            raise SchemaResolutionError(msg)
+
+        return d_unresolved
+
+
+def _resolve(writer, reader):
+    """Plan for :func:`compile_resolved_decoder`; raises
+    SchemaResolutionError when ``writer`` cannot be read as ``reader``."""
     wt, rt = _schema_type(writer), _schema_type(reader)
     if wt == "union":
-        idx, pos = _read_long(buf, pos)
-        if not 0 <= idx < len(writer):
-            raise CorruptBlock(f"union index {idx} out of range")
-        return decode_resolved(writer[idx], reader, buf, pos)
+        branches = [compile_resolved_decoder(b, reader) for b in writer]
+
+        def d_writer_union(buf, pos):
+            idx, pos = _read_long(buf, pos)
+            if not 0 <= idx < len(branches):
+                raise CorruptBlock(f"union index {idx} out of range")
+            return branches[idx](buf, pos)
+
+        return d_writer_union
     if rt == "union":
+        cands = []
         for branch in reader:
             try:
-                return decode_resolved(writer, branch, buf, pos)
+                cands.append(_resolve(writer, branch))
             except SchemaResolutionError:
                 continue
-        raise SchemaResolutionError(f"writer {wt} matches no reader union branch")
-    if wt == "record" and rt == "record":
-        wfields = {f["name"]: f for f in writer["fields"]}
-        rnames = {f["name"] for f in reader["fields"]}
-        rec = {}
-        # writer order governs the byte stream
-        for wf in writer["fields"]:
-            if wf["name"] in rnames:
-                rf = next(f for f in reader["fields"] if f["name"] == wf["name"])
-                rec[wf["name"]], pos = decode_resolved(
-                    wf["type"], rf["type"], buf, pos
-                )
-            else:  # skipped: decode with the writer schema, discard
-                _, pos = decode_value(wf["type"], buf, pos)
+        if not cands:
+            raise SchemaResolutionError(f"writer {wt} matches no reader union branch")
+        if len(cands) == 1:
+            return cands[0]
+
+        def d_reader_union(buf, pos):
+            for cand in cands[:-1]:
+                try:
+                    return cand(buf, pos)
+                except SchemaResolutionError:
+                    continue
+            return cands[-1](buf, pos)
+
+        return d_reader_union
+    if wt == rt == "record":
+        rfields = {f["name"]: f for f in reader["fields"]}
+        wnames = {f["name"] for f in writer["fields"]}
+        steps = [
+            (wf["name"], _resolve(wf["type"], rfields[wf["name"]]["type"]))
+            if wf["name"] in rfields
+            else (None, compile_decoder(wf["type"]))
+            for wf in writer["fields"]
+        ]
+        defaults = []
         for rf in reader["fields"]:
-            if rf["name"] not in wfields:
+            if rf["name"] not in wnames:
                 if "default" not in rf:
                     raise SchemaResolutionError(
                         f"reader field {rf['name']} missing and has no default"
                     )
-                rec[rf["name"]] = rf["default"]
-        return rec, pos
-    if wt == "array" and rt == "array":
-        items = []
-        while True:
-            count, pos = _read_long(buf, pos)
-            if count == 0:
-                return items, pos
-            if count < 0:
-                count = -count
-                _, pos = _read_long(buf, pos)
-            for _ in range(count):
-                item, pos = decode_resolved(writer["items"], reader["items"], buf, pos)
-                items.append(item)
-    if wt == "map" and rt == "map":
-        entries = {}
-        while True:
-            count, pos = _read_long(buf, pos)
-            if count == 0:
-                return entries, pos
-            if count < 0:
-                count = -count
-                _, pos = _read_long(buf, pos)
-            if count > MAX_BLOCK_RECORDS:
-                raise CorruptBlock("map count out of bounds")
-            for _ in range(count):
-                kraw, pos = _read_sized(buf, pos)
-                entries[kraw.decode("utf-8")], pos = decode_resolved(
-                    writer["values"], reader["values"], buf, pos
-                )
-    if wt == "enum" and rt == "enum":
-        # spec: match by symbol NAME against the reader's symbol list;
-        # a writer symbol the reader lacks resolves to the reader's
-        # declared enum default (Avro 1.9+) or errors loudly.
-        idx, pos = _read_long(buf, pos)
-        wsyms = writer["symbols"]
-        if not 0 <= idx < len(wsyms):
-            raise CorruptBlock(f"enum index {idx} out of range")
-        sym = wsyms[idx]
-        if sym in reader["symbols"]:
-            return sym, pos
-        if "default" in reader:
-            return reader["default"], pos
-        raise SchemaResolutionError(
-            f"writer enum symbol {sym!r} absent from reader (no default)"
-        )
-    if wt == "fixed" and rt == "fixed":
-        if writer["size"] != reader["size"]:
-            raise SchemaResolutionError("fixed size mismatch between schemas")
-        return decode_value(writer, buf, pos)
-    if wt == rt or rt in _PROMOTIONS.get(wt, ()):  # identity or promotion
-        val, pos = decode_value(writer, buf, pos)
-        if rt in ("float", "double") and wt in ("int", "long"):
-            val = float(val)
-        elif rt == "long" and wt == "int":
-            val = int(val)
-        elif rt == "string" and wt == "bytes":
-            val = val.decode("utf-8")
-        elif rt == "bytes" and wt == "string":
-            val = val.encode("utf-8")
-        return val, pos
-    raise SchemaResolutionError(f"cannot read writer {wt} as reader {rt}")
-
-
-def compile_resolved_decoder(writer, reader):
-    """Precompile the schema-resolution plan :func:`decode_resolved`
-    re-derives PER RECORD (field-name dict builds, linear reader-field
-    scans, per-value type dispatch) into a closure tree built once per
-    (writer, reader) pair. Record plans pair each writer field with
-    either a compiled resolved decoder (kept field), a compiled
-    writer-schema decoder whose value is discarded (skipped field — the
-    projected-scan fast path), or a lazily-raising default slot;
-    identity/promotion leaves reuse :func:`compile_decoder`'s generated
-    code. Shapes the compiler does not plan (unions, arrays, maps,
-    enums, fixed) fall back to decode_resolved itself — identical
-    semantics, just not precompiled. Resolution errors stay LAZY (the
-    missing-default raise fires per record, exactly like the
-    interpreter) so a zero-record file still reads clean."""
-    wt, rt = _schema_type(writer), _schema_type(reader)
-    if wt == "record" and rt == "record":
-        rfields = {f["name"]: f for f in reader["fields"]}
-        wnames = {f["name"] for f in writer["fields"]}
-        steps = []
-        for wf in writer["fields"]:
-            rf = rfields.get(wf["name"])
-            if rf is None:  # skipped: decode with the writer schema, discard
-                steps.append((None, compile_decoder(wf["type"])))
-            else:
-                steps.append(
-                    (wf["name"], compile_resolved_decoder(wf["type"], rf["type"]))
-                )
-        defaults = []
-        for rf in reader["fields"]:
-            if rf["name"] not in wnames:
-                defaults.append(
-                    (rf["name"], rf.get("default"), "default" in rf)
-                )
+                defaults.append((rf["name"], rf["default"]))
 
         def d_rec(buf, pos):
             rec = {}
@@ -1140,40 +1037,54 @@ def compile_resolved_decoder(writer, reader):
                 v, pos = fd(buf, pos)
                 if name is not None:
                     rec[name] = v
-            for name, dv, has in defaults:
-                if not has:
-                    raise SchemaResolutionError(
-                        f"reader field {name} missing and has no default"
-                    )
+            for name, dv in defaults:
                 rec[name] = dv
             return rec, pos
 
         return d_rec
-    if wt not in ("union", "array", "map", "enum", "fixed", "record") and (
-        wt == rt or rt in _PROMOTIONS.get(wt, ())
-    ):
-        base = compile_decoder(writer)
-        if rt in ("float", "double") and wt in ("int", "long"):
-            conv = float
-        elif rt == "long" and wt == "int":
-            conv = int
-        elif rt == "string" and wt == "bytes":
-            conv = lambda b: b.decode("utf-8")  # noqa: E731
-        elif rt == "bytes" and wt == "string":
-            conv = lambda s: s.encode("utf-8")  # noqa: E731
-        else:
-            return base  # identity leaf: the codegen decoder as-is
+    if wt == rt == "array":
+        return _array_decoder(
+            compile_resolved_decoder(writer["items"], reader["items"])
+        )
+    if wt == rt == "map":
+        return _map_decoder(
+            compile_resolved_decoder(writer["values"], reader["values"])
+        )
+    conv = None
+    if wt == rt == "enum":
+        rsyms = set(reader["symbols"])
+        remap = {
+            s: s if s in rsyms else reader.get("default")
+            for s in writer["symbols"]
+        }
 
-        def d_conv(buf, pos):
-            v, pos = base(buf, pos)
-            return conv(v), pos
+        def conv(sym):
+            if remap[sym] is None:
+                raise SchemaResolutionError(
+                    f"writer enum symbol {sym!r} absent from reader (no default)"
+                )
+            return remap[sym]
 
-        return d_conv
+    elif wt == rt == "fixed":
+        if writer["size"] != reader["size"]:
+            raise SchemaResolutionError("fixed size mismatch between schemas")
+    elif wt != rt and rt not in _PROMOTIONS.get(wt, ()):
+        raise SchemaResolutionError(f"cannot read writer {wt} as reader {rt}")
+    elif rt in ("float", "double") and wt in ("int", "long"):
+        conv = float
+    elif rt == "string" and wt == "bytes":
+        conv = lambda b: b.decode("utf-8")  # noqa: E731
+    elif rt == "bytes" and wt == "string":
+        conv = lambda s: s.encode("utf-8")  # noqa: E731
+    base = compile_decoder(writer)
+    if conv is None:
+        return base  # identity leaf: the codegen decoder as-is
 
-    def d_fallback(buf, pos):
-        return decode_resolved(writer, reader, buf, pos)
+    def d_conv(buf, pos):
+        v, pos = base(buf, pos)
+        return conv(v), pos
 
-    return d_fallback
+    return d_conv
 
 
 def read_ocf_resolved(data: bytes, reader_schema, logical: bool = False) -> list:
@@ -1184,24 +1095,10 @@ def read_ocf_resolved(data: bytes, reader_schema, logical: bool = False) -> list
     default, or re-reads a raw-bytes writer column under a decimal
     annotation)."""
     writer, codec, sync, pos = read_header(data)
-    resolved = compile_resolved_decoder(writer, reader_schema)
+    dec = compile_resolved_decoder(writer, reader_schema)
     records = []
-    n = len(data)
-    while pos < n:
-        count, p = _read_long(data, pos)
-        size, p = _read_long(data, p)
-        if count < 0 or size < 0 or p + size + SYNC_SIZE > n:
-            raise CorruptBlock("bad block structure")
-        if data[p + size : p + size + SYNC_SIZE] != sync:
-            raise CorruptBlock("sync marker mismatch")
-        payload = _decompress(data[p : p + size], codec)
-        bpos = 0
-        for _ in range(count):
-            rec, bpos = resolved(payload, bpos)
-            records.append(rec)
-        if bpos != len(payload):
-            raise CorruptBlock("trailing bytes in block")
-        pos = p + size + SYNC_SIZE
+    for _start, count, p, q in _walk_blocks(data, pos, sync):
+        records.extend(_decode_block(_decompress(data[p:q], codec), dec, count))
     if logical:
         return [materialize_logical(reader_schema, r) for r in records]
     return records
@@ -1225,23 +1122,20 @@ def sampled_validate(
         schema, codec, sync, pos = read_header(data)
     except CorruptHeader as exc:
         return False, 0, str(exc)
-    n = len(data)
-    block_no = checked = 0
-    while pos < n and checked < limit:
-        try:
-            count, p = _read_long(data, pos)
-            if not 0 <= count <= MAX_BLOCK_RECORDS:
-                raise CorruptBlock(f"record count {count} out of bounds")
-            size, p = _read_long(data, p)
-            if not 0 <= size <= MAX_BLOCK_BYTES or p + size + SYNC_SIZE > n:
-                raise CorruptBlock(f"block size {size} exceeds file")
-            if data[p + size : p + size + SYNC_SIZE] != sync:
-                raise CorruptBlock("sync marker mismatch")
+    dec = compile_decoder(schema)
+    checked = 0
+    try:
+        for block_no, (start, count, p, q) in enumerate(
+            _walk_blocks(data, pos, sync)
+        ):
             if block_no % decode_every == 0:  # the sampled payload decode
-                _decode_block(_decompress(data[p : p + size], codec), schema, count)
+                try:
+                    _decode_block(_decompress(data[p:q], codec), dec, count)
+                except (CorruptHeader, ValueError, OverflowError) as exc:
+                    return False, checked, f"block@{start}: {exc}"
                 checked += count
-        except (CorruptBlock, CorruptHeader, ValueError, OverflowError) as exc:
-            return False, checked, f"block@{pos}: {exc}"
-        pos = p + size + SYNC_SIZE
-        block_no += 1
+                if checked >= limit:
+                    break
+    except CorruptBlock as exc:  # a frame or sync marker the walk rejected
+        return False, checked, str(exc)
     return True, checked, ""

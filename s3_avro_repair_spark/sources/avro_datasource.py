@@ -165,9 +165,10 @@ class AvroOCFReader(DataSourceReader):
             SYNC_SIZE,
             CorruptBlock,
             CorruptHeader,
+            _block_frame,
             _decode_block,
             _decompress,
-            _read_long,
+            compile_decoder,
             read_header,
         )
 
@@ -205,6 +206,7 @@ class AvroOCFReader(DataSourceReader):
                         raise
                     head += f.read(min(len(head), fsize - len(head)))
             names = [fl["name"] for fl in schema["fields"]]
+            dec = compile_decoder(schema)
 
             # Whole-file fast path (r11): a container that fits one
             # split and one chunk is read once and decoded from memory —
@@ -269,24 +271,18 @@ class AvroOCFReader(DataSourceReader):
             while pos < end:
                 ensure(pos + 20)  # two varints are <= 10 bytes each
                 try:
-                    count, q = _read_long(buf, pos - base)
-                    size, q = _read_long(buf, q)
-                except (CorruptBlock, IndexError) as exc:
+                    count, p, q = _block_frame(buf, pos - base, fsize - base)
+                except CorruptBlock as exc:
                     raise CorruptBlock(f"block@{pos}: {exc}") from exc
-                payload_at = base + q
-                if count < 0 or size < 0 or payload_at + size + SYNC_SIZE > fsize:
-                    raise CorruptBlock(f"block@{pos}: bad block structure")
-                ensure(payload_at + size + SYNC_SIZE)
+                payload_at, payload_end = base + p, base + q
+                ensure(payload_end + SYNC_SIZE)
                 payload = _decompress(
-                    buf[payload_at - base : payload_at - base + size], codec
+                    buf[payload_at - base : payload_end - base], codec
                 )
-                pending.extend(_decode_block(payload, schema, count))
-                tail = buf[
-                    payload_at - base + size : payload_at - base + size + SYNC_SIZE
-                ]
-                if tail != sync:
+                pending.extend(_decode_block(payload, dec, count))
+                if buf[payload_end - base : payload_end - base + SYNC_SIZE] != sync:
                     raise CorruptBlock(f"block@{pos}: sync marker damaged")
-                pos = payload_at + size + SYNC_SIZE
+                pos = payload_end + SYNC_SIZE
                 if len(pending) >= _BATCH_ROWS:
                     yield make_batch()
                     pending = []

@@ -862,7 +862,7 @@ EVOLVED_READER_SCHEMA = {
 def avro_scan_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution scan: the files were written with the full
     5-field writer schema; this scan reads them under TODAY'S reader
-    schema (avro_codec.decode_resolved, Avro spec §Schema Resolution):
+    schema (avro_codec.read_ocf_resolved, Avro spec §Schema Resolution):
     writer-only fields are skipped byte-exactly, the reader-only
     ``region`` field takes its declared default. This is the read path
     that lets one 100 TB pass apply a current schema to years of
@@ -899,7 +899,7 @@ def avro_scan_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-pruned container scan: decode ONLY the projected fields
     by reading under a reader schema that is a 2-field subset of the
     5-field writer schema — the Schema Resolution skip machinery
-    (avro_codec.decode_resolved) walks the unselected fields
+    (avro_codec.read_ocf_resolved) walks the unselected fields
     byte-exactly without materializing a single Python value for them.
     This is predicate-free column pruning pushed INTO the Avro decode:
     parquet gets it from the format's columnar layout, row-oriented

@@ -200,7 +200,6 @@ def test_schema_resolution_skip_default_promote():
     promotion lattice (spec §Schema Resolution)."""
     from s3_avro_repair_spark.avro_codec import (
         SchemaResolutionError,
-        decode_resolved,
         read_ocf_resolved,
         write_ocf_bytes,
     )
@@ -360,12 +359,125 @@ def test_block_stats_rejects_structural_damage(data):
         block_stats(inject_bad_header(data))
 
 
+def _one_block_container(ftype, payload: bytes) -> bytes:
+    """A container holding one hand-encoded record of the one-field
+    record schema ``{"v": ftype}``: the header the writer emits for no
+    records, then a single block framed around ``payload``."""
+    from s3_avro_repair_spark.avro_codec import _encode_long, read_header
+
+    schema = {"type": "record", "name": "r", "fields": [{"name": "v", "type": ftype}]}
+    head = write_ocf_bytes(schema, [])
+    _, _, sync, _ = read_header(head)
+    frame = bytearray()
+    _encode_long(1, frame)
+    _encode_long(len(payload), frame)
+    return head + bytes(frame) + payload + sync
+
+
+def _varints(*ns: int) -> bytes:
+    from s3_avro_repair_spark.avro_codec import _encode_long
+
+    out = bytearray()
+    for n in ns:
+        _encode_long(n, out)
+    return bytes(out)
+
+
+_DAMAGED_VALUES = {
+    # array<long> whose block count is rewritten to 2^40 (three real items)
+    "array_count": (
+        {"type": "array", "items": "long"},
+        _varints(2**40, 1, 2, 3, 0),
+        "array count out of bounds",
+    ),
+    "map_count": (
+        {"type": "map", "values": "long"},
+        _varints(-(2**40), 4) + _varints(1) + b"k" + _varints(1, 0),
+        "map count out of bounds",
+    ),
+    "map_key_utf8": (
+        {"type": "map", "values": "long"},
+        _varints(1, 1) + b"\xff" + _varints(7, 0),
+        "invalid utf-8 string",
+    ),
+    "enum_index": (
+        {"type": "enum", "name": "e", "symbols": ["A", "B", "C"]},
+        _varints(5),
+        "enum index 5 out of range",
+    ),
+    "union_index": (["null", "long"], _varints(3, 1), "union index 3 out of range"),
+    "fixed_past_end": ({"type": "fixed", "name": "f", "size": 8}, b"abc", "fixed past end"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DAMAGED_VALUES))
+def test_damaged_values_raise_the_same_corrupt_block_on_every_read(case):
+    """Plain and resolved reads share one decoder, so a damaged value
+    raises the same CorruptBlock from both: the array count bound holds
+    for resolved reads too (without it a 2^40 count is read item by item
+    until the buffer runs out), and a map key that is not UTF-8 is
+    CorruptBlock, not a bare UnicodeDecodeError."""
+    from s3_avro_repair_spark.avro_codec import read_ocf_resolved
+
+    ftype, payload, msg = _DAMAGED_VALUES[case]
+    data = _one_block_container(ftype, payload)
+    schema = {"type": "record", "name": "r", "fields": [{"name": "v", "type": ftype}]}
+    with pytest.raises(CorruptBlock, match=msg):
+        read_ocf(data)
+    with pytest.raises(CorruptBlock, match=msg):
+        read_ocf_resolved(data, schema)
+    res = salvage_ocf(data)
+    assert res.n_blocks_bad == 1 and msg in res.errors[0]
+
+
+def test_resolution_errors_stay_lazy():
+    """An incompatible reader schema is refused on the first decoded
+    value, not when the decoder is planned: a zero-record container
+    reads as [] under it, and the same schemas over one record raise."""
+    from s3_avro_repair_spark.avro_codec import (
+        SchemaResolutionError,
+        read_ocf_resolved,
+    )
+
+    writer = {"type": "record", "name": "r", "fields": [
+        {"name": "a", "type": "double"},
+        {"name": "e", "type": {"type": "enum", "name": "c", "symbols": ["X", "Y"]}},
+    ]}
+    readers = [
+        {"type": "record", "name": "r", "fields": [{"name": "a", "type": "int"}]},
+        {"type": "record", "name": "r", "fields": [{"name": "b", "type": "long"}]},
+        {"type": "record", "name": "r", "fields": [
+            {"name": "e", "type": {"type": "fixed", "name": "c", "size": 1}}]},
+    ]
+    empty = write_ocf_bytes(writer, [])
+    one = write_ocf_bytes(writer, [{"a": 1.5, "e": "Y"}])
+    for reader in readers:
+        assert read_ocf_resolved(empty, reader) == []
+        with pytest.raises(SchemaResolutionError):
+            read_ocf_resolved(one, reader)
+    # Per value, too: an unresolvable writer-union branch or a reader
+    # enum without the writer's symbol fails only when that value occurs.
+    wu = {"type": "record", "name": "u", "fields": [
+        {"name": "v", "type": ["null", "string", "long"]},
+        {"name": "e", "type": {"type": "enum", "name": "c", "symbols": ["X", "Y"]}},
+    ]}
+    ru = {"type": "record", "name": "u", "fields": [
+        {"name": "v", "type": ["null", "double"]},
+        {"name": "e", "type": {"type": "enum", "name": "c", "symbols": ["X"]}},
+    ]}
+    ok = write_ocf_bytes(wu, [{"v": None, "e": "X"}, {"v": 3, "e": "X"}])
+    assert read_ocf_resolved(ok, ru) == [{"v": None, "e": "X"}, {"v": 3.0, "e": "X"}]
+    for bad in ({"v": "s", "e": "X"}, {"v": 1, "e": "Y"}):
+        with pytest.raises(SchemaResolutionError):
+            read_ocf_resolved(write_ocf_bytes(wu, [bad]), ru)
+
+
 # ---------------------------------------------------------------------------
 # property test: random walks through the schema-evolution lattice
 # ---------------------------------------------------------------------------
 
 # writer type -> legal reader promotions (spec §Schema Resolution),
-# with a value transform mirroring what decode_resolved must apply.
+# with a value transform mirroring what read_ocf_resolved must apply.
 _LATTICE = {
     "int": ["int", "long", "float", "double"],
     "long": ["long", "float", "double"],
